@@ -181,6 +181,67 @@ def _record_write_order(table: EncodedTable, cluster: tuple, zorder: bool) -> No
         table.set_property("write-order-zorder", bool(zorder))
 
 
+def _validate_layout(cluster_by, zorder: bool, names) -> tuple:
+    """The cluster_by/zorder checks every layout-taking writer runs before
+    touching the table; returns the cluster columns as a tuple."""
+    cluster = tuple(cluster_by or ())
+    if zorder and not cluster:
+        # without cluster columns the z-key is empty: the caller would pay
+        # the full raw-row shuffle for an unclustered table and no pruning
+        # (the embulk-config layer already refuses this combination)
+        raise ConfigException("zorder=True requires cluster_by")
+    for c in cluster:
+        if c not in names:
+            raise ConfigException(f"cluster_by: unknown column {c!r}")
+    return cluster
+
+
+def _recorded_layout(table: EncodedTable) -> tuple[tuple, bool]:
+    """(cluster columns, zorder) the table recorded (_record_write_order),
+    which every rewrite re-applies. write-order may name columns dropped
+    since it was recorded; only columns that still exist are kept
+    (drop_column also scrubs)."""
+    names_now = {f.name for f in table.schema().fields}
+    props = table.properties()
+    cluster = tuple(c for c in (props.get("write-order") or []) if c in names_now)
+    return cluster, bool(props.get("write-order-zorder", False))
+
+
+def _encode_planned(
+    dfp: DataFrame, policy: CodecPolicy, cluster: tuple, zorder: bool,
+    shuffle_rows: bool = False,
+) -> DataFrame:
+    """Encode part-planned rows (``part_id`` assigned) into chunk rows
+    grouped by part, ready for :func:`_stage`."""
+    if shuffle_rows or zorder:
+        # z-order requires WHOLE parts per task: rank-interleaving over a
+        # scan-partition fragment of a part gives fragment-sized boxes
+        # (measured: 0.65x-domain chunk zones vs 0.23 with co-located
+        # parts). The raw-row shuffle is the same trade Delta's OPTIMIZE
+        # ZORDER makes (repartition by z-range before rewriting files).
+        return encode_grouped(dfp, policy, cluster_by=cluster, zorder=zorder)
+    # shuffle AFTER encoding: only compressed chunks move to part files
+    return encode_local(dfp, policy, cluster_by=cluster).repartition("part_id")
+
+
+def _stage(
+    spark: SparkSession, table: EncodedTable, encoded: DataFrame,
+    first_col: str, t0: float,
+) -> tuple[str, dict[int, dict]]:
+    """Write encoded chunk rows into a fresh staging dir of ``table`` and
+    compute the staged parts' lineage rows (one metadata job), keyed by
+    staged part id -- empty when no part was staged. The caller hands both
+    to ``EncodedTable.commit_staging``."""
+    import os
+
+    staging = table.new_staging()
+    _write_chunk_files(encoded, staging)
+    if not any(n.startswith("part_id=") for n in os.listdir(staging)):
+        return staging, {}
+    on_disk = spark.read.parquet(staging)
+    return staging, _lineage_rows(on_disk, first_col, time.time() - t0)
+
+
 def encode_job(
     spark: SparkSession,
     df: DataFrame,
@@ -227,16 +288,7 @@ def encode_job(
     """
     policy = policy or CodecPolicy()
     policy.validate(df.schema)
-    cluster = tuple(cluster_by or ())
-    if zorder and not cluster:
-        # without cluster columns the z-key is empty: the caller would pay
-        # the full raw-row shuffle for an unclustered table and no pruning
-        # (the embulk-config layer already refuses this combination)
-        raise ConfigException("zorder=True requires cluster_by")
-    names = set(df.columns)
-    for c in cluster:
-        if c not in names:
-            raise ConfigException(f"cluster_by: unknown column {c!r}")
+    cluster = _validate_layout(cluster_by, zorder, set(df.columns))
     _validate_bucket_request(bucket_by, df.schema)
     t0 = time.time()
 
@@ -265,35 +317,15 @@ def encode_job(
         keep = spark.createDataFrame([(p,) for p in todo], "part_id long")
         dfp = dfp.join(F.broadcast(keep), "part_id", "left_semi")
 
-    if shuffle_mode == "rows" or zorder:
-        # z-order requires WHOLE parts per task: rank-interleaving over a
-        # scan-partition fragment of a part gives fragment-sized boxes
-        # (measured: 0.65x-domain chunk zones vs 0.23 with co-located
-        # parts). The raw-row shuffle is the same trade Delta's OPTIMIZE
-        # ZORDER makes (repartition by z-range before rewriting files).
-        encoded = encode_grouped(dfp, policy, cluster_by=cluster, zorder=zorder)
-    else:
-        # shuffle AFTER encoding: only compressed chunks move to part files
-        encoded = encode_local(dfp, policy, cluster_by=cluster).repartition(
-            "part_id"
-        )
-    staging = table.new_staging()
-    _write_chunk_files(encoded, staging)
-
-    import os
-
-    wrote_parts = any(n.startswith("part_id=") for n in os.listdir(staging))
-    if not wrote_parts:
-        table.commit_staging(staging, {})
-        return table
-    on_disk = spark.read.parquet(staging)
-    lineage = _lineage_rows(on_disk, df.schema.fields[0].name, time.time() - t0)
+    encoded = _encode_planned(dfp, policy, cluster, zorder, shuffle_mode == "rows")
+    staging, lineage = _stage(spark, table, encoded, df.schema.fields[0].name, t0)
     _annotate_buckets(lineage, plan.bucket_ranges, shift=part_base)
     table.commit_staging(staging, lineage)
-    table.log_op(
-        "encode",
-        {"parts": len(lineage), "rows": sum(r["rows"] for r in lineage.values())},
-    )
+    if lineage:
+        table.log_op(
+            "encode",
+            {"parts": len(lineage), "rows": sum(r["rows"] for r in lineage.values())},
+        )
     return table
 
 
@@ -322,13 +354,7 @@ def encode_parquet_job(
     # differently and would pay a redundant listing)
     _splits, schema, fingerprint = plan_parquet_splits(parquet_path, policy)
     policy.validate(schema)
-    cluster = tuple(cluster_by or ())
-    if zorder and not cluster:
-        raise ConfigException("zorder=True requires cluster_by")
-    names = {f.name for f in schema.fields}
-    for c in cluster:
-        if c not in names:
-            raise ConfigException(f"cluster_by: unknown column {c!r}")
+    cluster = _validate_layout(cluster_by, zorder, {f.name for f in schema.fields})
     t0 = time.time()
     table = EncodedTable.create(table_path, schema, policy, if_exists=if_exists)
     if table.properties().get("bucket-by"):
@@ -375,20 +401,13 @@ def encode_parquet_job(
         skip_parts=frozenset(done), max_parts=max_parts, cluster_by=cluster,
         plan=(_splits, schema), zorder=zorder,
     )
-    staging = table.new_staging()
-    _write_chunk_files(encoded, staging)
-    import os
-
-    if not any(n.startswith("part_id=") for n in os.listdir(staging)):
-        table.commit_staging(staging, {})
-        return table
-    on_disk = spark.read.parquet(staging)
-    lineage = _lineage_rows(on_disk, schema.fields[0].name, time.time() - t0)
+    staging, lineage = _stage(spark, table, encoded, schema.fields[0].name, t0)
     table.commit_staging(staging, lineage)
-    table.log_op(
-        "encode_direct",
-        {"parts": len(lineage), "rows": sum(r["rows"] for r in lineage.values())},
-    )
+    if lineage:
+        table.log_op(
+            "encode_direct",
+            {"parts": len(lineage), "rows": sum(r["rows"] for r in lineage.values())},
+        )
     return table
 
 
@@ -1541,25 +1560,6 @@ def decode_job_chunks(
     )
 
 
-def _tag_referenced_parts(table: EncodedTable) -> set[int] | None:
-    """Part ids referenced by ANY tagged generation's lineage -- the pinned
-    snapshots a reader may still target at snapshot-retention 0. Part ids
-    are never reused (the persisted high-water mark), so a rewritten-away
-    part is safe to delete exactly when no tagged generation lists it.
-    Returns None when a pinned generation's lineage can't be read: the
-    caller must then delete NOTHING (fail-safe; vacuum reconciles later).
-    At very large part counts with many tags this is one O(shards) manifest
-    parse per tagged generation; rewrites already pay a lineage read, and
-    the sweep stays driver-metadata-only."""
-    ids: set[int] = set()
-    for g in sorted(table.tagged_generations()):
-        try:
-            ids |= set(table.lineage_at(g))
-        except Exception:
-            return None
-    return ids
-
-
 def compact_job(
     spark: SparkSession,
     table_path: str,
@@ -1570,101 +1570,45 @@ def compact_job(
     """Rewrite an EncodedTable into freshly planned, byte-balanced parts.
 
     Streaming micro-batches and resumed waves leave many small parts;
-    compaction decodes the committed data, re-plans partitions at the
-    current target size, encodes into staging, then atomically swaps the
-    manifest to the new part set and removes the old dirs -- the
-    maintenance-compaction analogue of Iceberg's rewrite_data_files.
+    compaction decodes every committed part (decode_table_scan, delete
+    vectors applied), re-plans partitions at the current target size and
+    commits through the same tail as every copy-on-write rewrite
+    (:func:`_swap_in_rewrite`): new ids minted above the high-water mark,
+    one generation flip that retires -- and tombstones -- every old id, so
+    a replayed encode wave can't resurrect them; old dirs go at snapshot
+    retention 0 unless a tag pins them. The maintenance-compaction
+    analogue of Iceberg's rewrite_data_files.
 
     ``cluster_by`` re-clusters the rewritten parts (and records the new
     write-order property): the way to retrofit tight zone maps onto a table
     that was originally appended unordered. ``None`` (default) inherits the
     table's recorded write-order so compaction never silently un-clusters a
     clustered table; pass ``[]`` to explicitly drop the clustering."""
-    import os
-    import shutil
+    from .operators.decode import decode_table_scan
 
     table = EncodedTable(table_path)
     old_parts = table.completed_parts()
-    policy = policy or table.policy()
+    props = table.properties()
     if cluster_by is None:
-        cluster_by = table.properties().get("write-order") or []
+        cluster_by = props.get("write-order") or []
     if zorder is None:  # inherit the recorded layout kind, like cluster_by
-        zorder = bool(table.properties().get("write-order-zorder", False))
-    cluster = tuple(cluster_by)
-    if zorder and not cluster:
-        raise ConfigException("zorder=True requires cluster_by")
-    names = {f.name for f in table.schema().fields}
-    for c in cluster:
-        if c not in names:
-            raise ConfigException(f"cluster_by: unknown column {c!r}")
-    df = decode_chunks(
-        table.read_encoded(spark), table.schema(),
-        aliases=table.stored_aliases(), dv=table.part_dv(),
-        fillable=table.added_columns(),
+        zorder = bool(props.get("write-order-zorder", False))
+    cluster = _validate_layout(
+        cluster_by, zorder, {f.name for f in table.schema().fields}
     )
-
-    bucket = _resolve_bucket_by(table, None, table.schema())
-    dfp, plan = _plan(df, policy, bucket=bucket)
-    # swap: move new dirs in under offset part_ids, then atomically replace
-    # the part set (next shard generation + one manifest pointer flip) so a
-    # crash mid-swap never exposes old+new parts together. Offset comes
-    # from the persisted high-water mark (not max(old_parts)) so the new
-    # ids can't collide with an incomplete encode plan's reserved range or
-    # a retired tombstone; the range is reserved before any dir lands.
-    offset = table.next_part_base()
-    if plan.n_parts:
-        table.note_part_extent(offset + plan.n_parts - 1)
-    if zorder:
-        encoded = encode_grouped(dfp, policy, cluster_by=cluster, zorder=True)
-    else:
-        encoded = encode_local(dfp, policy, cluster_by=cluster).repartition(
-            "part_id"
-        )
-    staging = table.new_staging()
-    t0 = time.time()
-    _write_chunk_files(encoded, staging)
-    on_disk = spark.read.parquet(staging)
-    lineage = _lineage_rows(on_disk, table.schema().fields[0].name, time.time() - t0)
-
-    remap: dict[int, int] = {}
-    for name in sorted(os.listdir(staging)):
-        if not name.startswith("part_id="):
-            continue
-        pid = int(name.split("=", 1)[1])
-        new_pid = pid + offset
-        remap[pid] = new_pid
-        dst = os.path.join(table.data_dir, f"part_id={new_pid}")
-        if os.path.exists(dst):
-            shutil.rmtree(dst)
-        os.rename(os.path.join(staging, name), dst)
-    _annotate_buckets(lineage, plan.bucket_ranges)
-    table._replace_parts({remap[pid]: row for pid, row in lineage.items()})
+    new_lineage = _swap_in_rewrite(
+        spark, table, decode_table_scan(spark, table, parts=old_parts), policy,
+        replace=old_parts, layout=(cluster, bool(zorder)),
+    )
     if cluster:
         _record_write_order(table, cluster, bool(zorder))
-    elif table.properties().get("write-order"):
+    elif props.get("write-order"):
         # explicitly un-clustered rewrite: the stale property would claim an
         # ordering the new parts don't have
         table.set_property("write-order", None)
         table.set_property("write-order-zorder", False)
-    shutil.rmtree(staging, ignore_errors=True)
-    # with snapshot retention on the pre-compaction generation stays
-    # readable via decode_job(at_gen=...) and vacuum expires it later; at
-    # retention 0 delete the old dirs EXCEPT those a tag's pinned lineage
-    # actually references -- deleting precisely (not "skip all when any tag
-    # exists") is what keeps a rewrite from stranding unreferenced dirs
-    # that verify_table would flag until the next vacuum
-    if table.snapshot_retention() == 0:
-        pinned = _tag_referenced_parts(table)
-        if pinned is not None:
-            for pid in old_parts:
-                if pid in pinned:
-                    continue
-                shutil.rmtree(
-                    os.path.join(table.data_dir, f"part_id={pid}"),
-                    ignore_errors=True,
-                )
     table.log_op(
-        "compact", {"parts_before": len(old_parts), "parts_after": len(lineage)}
+        "compact", {"parts_before": len(old_parts), "parts_after": len(new_lineage)}
     )
     return table
 
@@ -1752,12 +1696,12 @@ def rewrite_small_parts(
     # and shuffled: measured 2.8-16 s driver samples for ~220 KB of
     # selected bytes). Bucketed tables group within one bucket only, so
     # part/bucket purity is preserved by construction.
-    groups: list[list[int]] = []
+    groups: list[tuple[list[int], object]] = []
     by_bucket: dict[object, list[int]] = {}
     for p in sorted(selected):
         by_bucket.setdefault(lineage[p].get("bucket"), []).append(p)
     target = int(policy.target_partition_bytes)
-    for _bkt, pids in sorted(
+    for bkt, pids in sorted(
         by_bucket.items(), key=lambda kv: (kv[0] is None, str(kv[0]))
     ):
         cur: list[int] = []
@@ -1766,11 +1710,11 @@ def rewrite_small_parts(
             cur.append(p)
             acc += max(sizes[p], 1)
             if acc >= target:
-                groups.append(cur)
+                groups.append((cur, bkt))
                 cur, acc = [], 0
         if cur:
-            groups.append(cur)
-    new_lineage = _merge_parts_local(spark, table, groups, selected, policy)
+            groups.append((cur, bkt))
+    new_lineage = _local_parts_rewrite(spark, table, groups, selected, [], policy)
     report["parts_rewritten"] = len(selected)
     report["parts_written"] = len(new_lineage)
     report["bytes_written"] = sum(
@@ -1789,6 +1733,32 @@ def rewrite_small_parts(
 # skipped column/chunk range actually maps to skippable row groups; the
 # footer overhead at 64 MiB parts is noise.
 _CHUNK_ROW_GROUP_BYTES = 4 * 1024 * 1024
+
+
+def _write_chunk_part(enc, path: str, first_col: str) -> dict:
+    """Task-side write of ONE part's encoded chunk rows (an
+    ``_encode_slices`` table) to ``path`` in the same layout as
+    :func:`_write_chunk_files` -- (col, chunk_seq)-sorted, row groups of
+    about ``_CHUNK_ROW_GROUP_BYTES``, uncompressed -- returning the part's
+    lineage row (no ``wall_s``). Shared by the fused rewrites and the
+    Catalyst writer; each caller picks its own retry-safe file name."""
+    import pyarrow.parquet as pq
+
+    enc = enc.drop_columns(["part_id"]).sort_by(
+        [("col", "ascending"), ("chunk_seq", "ascending")]
+    )
+    rows_per_group = max(
+        1, int(_CHUNK_ROW_GROUP_BYTES * enc.num_rows // max(enc.nbytes, 1))
+    )
+    pq.write_table(enc, path, row_group_size=rows_per_group, compression="none")
+    return lineage_row_from_chunks(
+        *(
+            enc.column(c).to_pylist()
+            for c in ("chunk_seq", "col", "meta", "payload_sha", "raw_bytes",
+                      "enc_bytes", "n")
+        ),
+        first_col,
+    )
 
 
 def _write_chunk_files(encoded: DataFrame, staging: str) -> None:
@@ -2185,31 +2155,28 @@ def _delete_cow_inplace(
     affected: set[int],
     policy: CodecPolicy | None,
 ) -> dict[int, dict]:
-    """Fused task-local copy-on-write DELETE (r6).
+    """Fused task-local copy-on-write DELETE.
 
-    The generic rewrite tail (_swap_in_rewrite) decodes the affected
-    parts into JVM rows, persists them, re-plans partitions, ships every
-    byte back into Python to re-encode, shuffles chunks, and runs a
-    separate lineage job -- measured 8.6 s for an 18-part trickle delete
-    whose kernels cost ~2 core-seconds. A DELETE never changes a row, so
-    each part can rewrite 1:1 where it sits: one task decodes its part
-    with pyarrow, drops matching rows, re-applies the recorded
-    write-order, re-encodes through the same chunk kernels, writes the
-    (col, chunk_seq)-sorted chunk parquet, and returns the lineage row --
-    ZERO payload bytes cross the JVM boundary or the network, the Iceberg
-    rewrite-files shape (1.5 s for the same delete). Bucket purity is
-    preserved by construction (rows never move between parts; the old
-    part's bucket tag is copied). UPDATE/MERGE keep the generic tail:
-    their SET expressions are SQL, evaluated by Spark.
+    The Spark-side rewrite tail (_swap_in_rewrite) decodes the affected
+    parts into JVM rows, re-plans partitions, ships every byte back into
+    Python to re-encode, shuffles chunks, and runs a separate lineage job
+    -- measured 8.6 s for an 18-part trickle delete whose kernels cost ~2
+    core-seconds. A DELETE never changes a row, so each part rewrites 1:1
+    where it sits (:func:`_local_parts_rewrite`): one task per part drops
+    the matching rows and re-encodes the rest, and the driver commits all
+    replacements in one ``commit_staging`` generation flip that retires
+    the affected ids -- ZERO payload bytes cross the JVM boundary or the
+    network (1.5 s for the same delete). Bucket purity is preserved by
+    construction (rows never move between parts; the old part's bucket tag
+    is copied). UPDATE/MERGE keep the Spark-side tail: their SET
+    expressions are SQL, evaluated by Spark.
 
-    Row semantics are identical to the previous
-    ``filter(~coalesce(condition, False))``: a row whose predicate
-    evaluates to NULL is NOT deleted (same as merge-on-read's fill-false
-    marking) -- preserved bit-for-bit so existing results never change.
-    Literal validation also matches: _conjunct_condition is still built
-    driver-side so bad temporal/decimal literals refuse loudly before any
-    task runs. A part whose rows all match yields no replacement part
-    (its id is simply retired)."""
+    A row whose predicate evaluates to NULL is NOT deleted, the
+    ``filter(~coalesce(condition, False))`` semantics (same as
+    merge-on-read's fill-false marking). _conjunct_condition is still
+    built driver-side so bad temporal/decimal literals refuse loudly
+    before any task runs. A part whose rows all match yields no
+    replacement part (its id is simply retired)."""
     # loud literal validation (raises ConfigException on e.g. raw epoch
     # ints against temporal columns), exactly as the Spark-filter path did
     _conjunct_condition(conjuncts, table.schema())
@@ -2222,22 +2189,6 @@ def _delete_cow_inplace(
     )
 
 
-def _merge_parts_local(
-    spark: SparkSession,
-    table: EncodedTable,
-    groups: list[list[int]],
-    selected: set[int],
-    policy: CodecPolicy | None,
-) -> dict[int, dict]:
-    """Fused task-local compaction: each group of small parts merges into
-    ONE part written in place by its task (see _delete_cow_inplace for
-    the shape and why). Groups are bin-packed per bucket on the driver
-    from lineage byte counts, so bucket purity is preserved."""
-    lineage = table.lineage()
-    gs = [(pids, lineage[pids[0]].get("bucket")) for pids in groups]
-    return _local_parts_rewrite(spark, table, gs, selected, [], policy)
-
-
 def _local_parts_rewrite(
     spark: SparkSession,
     table: EncodedTable,
@@ -2246,19 +2197,20 @@ def _local_parts_rewrite(
     conjuncts: list[tuple],
     policy: CodecPolicy | None,
 ) -> dict[int, dict]:
-    """Shared fused rewrite core (r6): ``groups`` is a list of
+    """Shared fused rewrite core: ``groups`` is a list of
     ([old part ids], bucket_tag_or_None); each group becomes one task that
     decodes its parts with pyarrow (delete vectors applied), optionally
     drops rows matching ``conjuncts`` (NULL predicate = kept, see
-    _delete_cow_inplace), re-applies the recorded write-order, re-encodes
-    through the chunk kernels, writes one (col, chunk_seq)-sorted chunk
-    parquet into staging, and reports its lineage row. The driver then
-    moves the staged dirs in and flips the generation once
-    (_update_parts). No payload byte ever crosses the JVM boundary or the
-    network."""
+    _delete_cow_inplace), re-applies the recorded layout
+    (:func:`_recorded_layout`), re-encodes through the chunk kernels,
+    writes one chunk parquet into staging under its final part id
+    (:func:`_write_chunk_part`), and reports its lineage row. The driver
+    then commits every group at once through
+    ``EncodedTable.commit_staging(replace=affected)``: one generation
+    flip, replaced ids tombstoned. No payload byte ever crosses the JVM
+    boundary or the network. Returns the new parts' lineage rows."""
     import json as _json
     import os
-    import shutil
 
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -2269,11 +2221,7 @@ def _local_parts_rewrite(
     arrow_schema = to_arrow_schema(schema)
     fields = [(f.name, f.type) for f in arrow_schema]
     names_now = {f.name for f in schema.fields}
-    props = table.properties()
-    cluster = tuple(
-        c for c in (props.get("write-order") or []) if c in names_now
-    )
-    zorder = bool(props.get("write-order-zorder", False))
+    cluster, zorder = _recorded_layout(table)
     fillable = frozenset(table.added_columns()) & names_now
     aliases = table.stored_aliases()
     dv_all = table.part_dv()
@@ -2318,7 +2266,6 @@ def _local_parts_rewrite(
         import pandas as pd
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as _pq
 
         from embulk_output_s3_parquet_spark.operators.encode import (
             _effective_chunk_rows,
@@ -2374,38 +2321,17 @@ def _local_parts_rewrite(
                     int(new_pid), whole, colmap, eff,
                     bloom_cols=bloom_cols, ndv_cols=ndv_cols,
                 )
-                enc = enc.drop_columns(["part_id"]).sort_by(
-                    [("col", "ascending"), ("chunk_seq", "ascending")]
-                )
                 part_dir = os.path.join(staging, f"part_id={int(new_pid)}")
                 os.makedirs(part_dir, exist_ok=True)
-                rows_per_group = max(
-                    1,
-                    int(4 * 1024 * 1024 * enc.num_rows // max(enc.nbytes, 1)),
-                )
                 # temp + atomic replace onto a DETERMINISTIC name: a
                 # retried/speculative task re-replaces the same file
                 # instead of leaving two parquet files in one part dir
                 tmp = os.path.join(
                     part_dir, f".tmp-{_uuid.uuid4().hex[:12]}"
                 )
-                _pq.write_table(
-                    enc, tmp,
-                    row_group_size=rows_per_group,
-                    compression="none",
-                )
+                row = _write_chunk_part(enc, tmp, first_col)
                 os.replace(
                     tmp, os.path.join(part_dir, "part-00000.parquet")
-                )
-                row = lineage_row_from_chunks(
-                    enc.column("chunk_seq").to_pylist(),
-                    enc.column("col").to_pylist(),
-                    enc.column("meta").to_pylist(),
-                    enc.column("payload_sha").to_pylist(),
-                    enc.column("raw_bytes").to_pylist(),
-                    enc.column("enc_bytes").to_pylist(),
-                    enc.column("n").to_pylist(),
-                    first_col,
                 )
                 row["wall_s"] = round(time.time() - tw0, 3)
                 if int(bucket) >= 0:
@@ -2415,34 +2341,16 @@ def _local_parts_rewrite(
 
     with staging_heartbeat(staging):
         got = src.mapInPandas(rewrite, schema="new_pid long, lineage string").collect()
-    new_lineage: dict[int, dict] = {}
-    for r in got:
-        if r["lineage"]:
-            new_lineage[int(r["new_pid"])] = _json.loads(r["lineage"])
     if len(got) != len(work):
         raise RuntimeError(
             f"local rewrite incomplete: {len(got)}/{len(work)} groups reported"
         )
-    for pid in sorted(new_lineage):
-        dst = os.path.join(table.data_dir, f"part_id={pid}")
-        if os.path.exists(dst):
-            shutil.rmtree(dst)  # uncommitted leftover of a killed run
-        os.rename(os.path.join(staging, f"part_id={pid}"), dst)
-    table._update_parts(remove=set(affected), add=new_lineage)
-    # same post-flip hygiene as _swap_in_rewrite: at retention 0 only
-    # tag-pinned superseded parts survive
-    if table.snapshot_retention() == 0:
-        pinned = _tag_referenced_parts(table)
-        if pinned is not None:
-            for p in affected:
-                if p in pinned:
-                    continue
-                shutil.rmtree(
-                    os.path.join(table.data_dir, f"part_id={p}"),
-                    ignore_errors=True,
-                )
-    shutil.rmtree(staging, ignore_errors=True)
-    return new_lineage
+    # staged dirs already carry their final ids (offset + group index)
+    return table.commit_staging(
+        staging,
+        {int(r["new_pid"]): _json.loads(r["lineage"]) for r in got if r["lineage"]},
+        replace=set(affected),
+    )
 
 
 def _delete_mor(
@@ -2630,35 +2538,29 @@ def _mor_mark(
 def _swap_in_rewrite(
     spark: SparkSession,
     table: EncodedTable,
-    affected: set[int],
     new_rows: DataFrame,
     policy: CodecPolicy | None,
-    keep_affected: bool = False,
-    extra_rows: dict | None = None,
+    *,
+    replace: set[int],
+    amend: dict[int, dict] | None = None,
+    layout: tuple[tuple, bool] | None = None,
 ) -> dict[int, dict]:
-    """Shared tail of every copy-on-write rewrite (delete/update/merge):
-    encode ``new_rows`` into fresh part ids minted above the persisted
-    high-water mark, then atomically swap them in for ``affected`` via the
-    partial generation flip (``_update_parts``: unchanged lineage shards
-    hard-linked, removed ids tombstoned; a crash before the flip leaves the
-    old table fully intact). Returns the new parts' lineage rows."""
-    import os
-    import shutil
-
+    """Spark-side tail of every rewrite that is not task-local (compaction,
+    update, merge): plan ``new_rows`` into byte-balanced parts, encode them
+    under ``layout`` = (cluster columns, zorder) -- default the recorded
+    one, :func:`_recorded_layout` -- stage, and commit through
+    ``EncodedTable.commit_staging``: fresh ids minted above the persisted
+    high-water mark, ONE generation flip that removes and tombstones
+    ``replace`` and overwrites the ``amend`` rows (merge-on-read vectors;
+    pass ``replace=set()`` to keep the vectored parts live). A crash before
+    the flip leaves the old table fully intact. Returns the new parts'
+    lineage rows."""
     policy = policy or table.policy()
     schema = table.schema()
+    cluster, zorder = layout if layout is not None else _recorded_layout(table)
     # the rewritten rows are decoded TWICE otherwise (partition planning's
     # size collect + the encode write); persist the frame in between
     new_rows = new_rows.persist()
-    # write-order may reference columns dropped since it was recorded;
-    # cluster only by columns that still exist (drop_column also scrubs)
-    names_now = {f.name for f in schema.fields}
-    props = table.properties()
-    cluster = tuple(
-        c for c in (props.get("write-order") or []) if c in names_now
-    )
-    zorder = bool(props.get("write-order-zorder", False))
-
     t0 = time.time()
     bucket = _resolve_bucket_by(table, None, schema)
     dfp, plan_out = _plan(new_rows, policy, bucket=bucket)
@@ -2670,52 +2572,12 @@ def _swap_in_rewrite(
     offset = table.next_part_base()
     if plan_out.n_parts:
         table.note_part_extent(offset + plan_out.n_parts - 1)
-    if zorder:
-        encoded = encode_grouped(dfp, policy, cluster_by=cluster, zorder=True)
-    else:
-        encoded = encode_local(dfp, policy, cluster_by=cluster).repartition(
-            "part_id"
-        )
-    staging = table.new_staging()
-    _write_chunk_files(encoded, staging)
-    new_lineage: dict[int, dict] = {}
-    staged = [
-        n for n in sorted(os.listdir(staging)) if n.startswith("part_id=")
-    ]
-    if staged:
-        on_disk = spark.read.parquet(staging)
-        raw = _lineage_rows(on_disk, schema.fields[0].name, time.time() - t0)
-        for name in staged:
-            pid = int(name.split("=", 1)[1])
-            dst = os.path.join(table.data_dir, f"part_id={pid + offset}")
-            if os.path.exists(dst):
-                shutil.rmtree(dst)  # uncommitted leftover of a killed run
-            os.rename(os.path.join(staging, name), dst)
-        _annotate_buckets(raw, plan_out.bucket_ranges)
-        new_lineage = {pid + offset: row for pid, row in raw.items()}
-    # keep_affected (merge-on-read UPDATE): the affected parts STAY live
-    # (their delete vectors in ``extra_rows`` mask the superseded rows) and
-    # the appended parts join them -- still ONE atomic flip
-    table._update_parts(
-        remove=set() if keep_affected else affected,
-        add={**(extra_rows or {}), **new_lineage},
+    encoded = _encode_planned(dfp, policy, cluster, zorder)
+    staging, lineage = _stage(spark, table, encoded, schema.fields[0].name, t0)
+    _annotate_buckets(lineage, plan_out.bucket_ranges)
+    new_lineage = table.commit_staging(
+        staging, lineage, offset=offset, replace=replace, amend=amend
     )
-    # old affected dirs only AFTER the atomic flip (kill-safe); with
-    # snapshot retention on they stay readable via decode_job(at_gen=...)
-    # until vacuum expires the superseded generation. At retention 0 only
-    # the parts a tag's pinned lineage ACTUALLY references survive -- the
-    # rest are deleted here rather than stranded for vacuum
-    if table.snapshot_retention() == 0 and not keep_affected:
-        pinned = _tag_referenced_parts(table)
-        if pinned is not None:
-            for p in affected:
-                if p in pinned:
-                    continue
-                shutil.rmtree(
-                    os.path.join(table.data_dir, f"part_id={p}"),
-                    ignore_errors=True,
-                )
-    shutil.rmtree(staging, ignore_errors=True)
     new_rows.unpersist()
     return new_lineage
 
@@ -2802,8 +2664,7 @@ def update_job(
         updated = df.filter(cond).select(*cols)
         amended, _fresh = _mor_mark(spark, table, conjuncts, affected)
         new_lineage = _swap_in_rewrite(
-            spark, table, affected, updated, policy,
-            keep_affected=True, extra_rows=amended,
+            spark, table, updated, policy, replace=set(), amend=amended
         )
         df.unpersist()
         report.update(
@@ -2813,7 +2674,7 @@ def update_job(
         table.log_op("update_mor", dict(report))
         return report
     updated = df.select(*cols)
-    new_lineage = _swap_in_rewrite(spark, table, affected, updated, policy)
+    new_lineage = _swap_in_rewrite(spark, table, updated, policy, replace=affected)
     df.unpersist()
     report["parts_rewritten"] = len(new_lineage)
     table.log_op("update", dict(report))
@@ -2977,15 +2838,14 @@ def merge_job(
             appended = source
             report["rows_inserted"] = n_src
         # vector the superseded images IN PLACE, append the new images:
-        # one atomic flip (keep_affected -- the vectored parts stay live)
+        # one atomic flip (replace nothing -- the vectored parts stay live)
         amended, _fresh = (
             _mor_mark(spark, table, mark_conjuncts, affected, refine=refine)
             if affected and mark_conjuncts
             else ({}, 0)
         )
         new_lineage = _swap_in_rewrite(
-            spark, table, affected, appended, policy,
-            keep_affected=True, extra_rows=amended,
+            spark, table, appended, policy, replace=set(), amend=amended
         )
         if affected:
             target.unpersist()
@@ -3028,7 +2888,7 @@ def merge_job(
     merged = pieces[0]
     for p in pieces[1:]:
         merged = merged.unionByName(p)
-    new_lineage = _swap_in_rewrite(spark, table, affected, merged, policy)
+    new_lineage = _swap_in_rewrite(spark, table, merged, policy, replace=affected)
     if affected:
         target.unpersist()
         inserts.unpersist()

@@ -1177,7 +1177,6 @@ class EncodedTableArrowWriter(DataSourceArrowWriter):
         import uuid
 
         import pyarrow as pa
-        import pyarrow.parquet as pq
         from pyspark import TaskContext
 
         from ..operators.encode import (
@@ -1230,31 +1229,15 @@ class EncodedTableArrowWriter(DataSourceArrowWriter):
             outs.append(out)
         if not outs:
             return _PartCommit(pid, {})
-        enc = pa.concat_tables(outs).drop_columns(["part_id"])
-        enc = enc.sort_by([("col", "ascending"), ("chunk_seq", "ascending")])
         part_dir = os.path.join(self._staging, f"part_id={pid}")
         os.makedirs(part_dir, exist_ok=True)
-        rows_per_group = max(
-            1, int(4 * 1024 * 1024 * enc.num_rows // max(enc.nbytes, 1))
-        )
+        # uuid-named: commit() keeps only the file its message names, so a
+        # failed or speculative attempt's leftover never commits
         fname = f"part-{uuid.uuid4().hex[:12]}.parquet"
-        pq.write_table(
-            enc,
-            os.path.join(part_dir, fname),
-            row_group_size=rows_per_group,
-            compression="none",
-        )
-        from ..jobs import lineage_row_from_chunks
+        from ..jobs import _write_chunk_part
 
-        lineage = lineage_row_from_chunks(
-            enc.column("chunk_seq").to_pylist(),
-            enc.column("col").to_pylist(),
-            enc.column("meta").to_pylist(),
-            enc.column("payload_sha").to_pylist(),
-            enc.column("raw_bytes").to_pylist(),
-            enc.column("enc_bytes").to_pylist(),
-            enc.column("n").to_pylist(),
-            self._first_col,
+        lineage = _write_chunk_part(
+            pa.concat_tables(outs), os.path.join(part_dir, fname), self._first_col
         )
         lineage["wall_s"] = round(time.time() - t0, 3)
         return _PartCommit(pid, lineage, fname)
@@ -1271,17 +1254,17 @@ class EncodedTableArrowWriter(DataSourceArrowWriter):
                 self._path, self._schema, self._policy, if_exists="delete"
             )
         table = EncodedTable(self._path)
-        if self._append:
+        recorded = table.properties().get("write-order")
+        if self._append and recorded and list(recorded) != self._cluster:
             # an append can only WEAKEN a recorded table-wide write order:
             # unless the new parts were clustered the same way, the claim
             # no longer holds (per-part zones keep pruning regardless)
-            recorded = table.properties().get("write-order")
-            if recorded and list(recorded) != list(self._cluster):
-                table.set_property("write-order", None)
-                table.set_property("write-order-zorder", False)
-        elif self._cluster:
-            if table.properties().get("write-order") != self._cluster:
-                table.set_property("write-order", self._cluster)
+            table.set_property("write-order", None)
+            table.set_property("write-order-zorder", False)
+        elif not self._append:
+            from ..jobs import _record_write_order
+
+            _record_write_order(table, tuple(self._cluster), self._zorder)
         good = [m for m in messages if m is not None and m.lineage]
         base = 0
         if self._append and good:
@@ -1291,7 +1274,6 @@ class EncodedTableArrowWriter(DataSourceArrowWriter):
             # resumed writer can never claim these ids)
             base = table.next_part_base()
             table.note_part_extent(base + max(m.part_id for m in good))
-        lineage = {base + m.part_id: m.lineage for m in good}
         # task-retry / speculation safety: a failed or speculative attempt
         # may have left its own uuid-named file in a part dir; keep ONLY
         # the file named by each part's committed message, and drop part
@@ -1308,16 +1290,9 @@ class EncodedTableArrowWriter(DataSourceArrowWriter):
             for f in os.listdir(pdir):
                 if f != keep[pid]:
                     os.remove(os.path.join(pdir, f))
-        if base:
-            # remap staged dirs to the minted ids, DESCENDING so a target
-            # never collides with a not-yet-renamed smaller staged pid
-            # (base >= 1 on any non-empty table, so pid+base > pid-1)
-            for pid in sorted(keep, reverse=True):
-                os.rename(
-                    os.path.join(self._staging, f"part_id={pid}"),
-                    os.path.join(self._staging, f"part_id={base + pid}"),
-                )
-        table.commit_staging(self._staging, lineage)
+        table.commit_staging(
+            self._staging, {m.part_id: m.lineage for m in good}, offset=base
+        )
 
     def abort(self, messages) -> None:
         import shutil

@@ -899,9 +899,11 @@ class EncodedTable:
             self._write_shard_file(parts_dir, shard, rows=merged)
 
     def _replace_parts(self, lineage_rows: dict[int, dict]) -> None:
-        """Atomically swap the full part set (compaction): build the next
-        generation's shard dir completely, then flip the manifest pointer in
-        one rename. A crash before the flip leaves the old part set intact."""
+        """Atomically swap the full part set: build the next generation's
+        shard dir completely, then flip the manifest pointer in one rename.
+        A crash before the flip leaves the old part set intact. Reached
+        only from :meth:`_update_parts` on a legacy inline-lineage table,
+        whose rows it migrates into shards."""
         import shutil
 
         m = self._core_manifest()
@@ -1022,7 +1024,8 @@ class EncodedTable:
             # resumed encode wave must NOT re-encode them (their original
             # rows would resurrect data a delete_job removed)
             retired = m.setdefault("properties", {}).setdefault("retired-parts", [])
-            retired.extend(sorted(int(p) for p in remove if int(p) not in set(retired)))
+            have = set(retired)
+            retired.extend(sorted(int(p) for p in remove if int(p) not in have))
         self._write_manifest(m)
         try:
             os.remove(os.path.join(new_dir, STAGING_LOCK))
@@ -1482,19 +1485,18 @@ class EncodedTable:
             )
 
         # step 1: re-key the column's lineage summaries (zones + sidecar
-        # blooms/sketches ride along via lineage_full -> _replace_parts'
-        # sidecar split). Idempotent: a re-run finds no `old` keys.
-        rows = self.lineage_full()
+        # blooms/sketches ride along via lineage_full -> the shard writer's
+        # sidecar split); only the shards holding a changed row rewrite.
+        # Idempotent: a re-run finds no `old` keys.
         changed = {}
-        for pid, row in rows.items():
+        for pid, row in self.lineage_full().items():
             z = row.get("zones") or {}
             if old in z:
                 z = dict(z)
                 z[new] = z.pop(old)
                 changed[pid] = {**row, "zones": z}
         if changed:
-            rows.update(changed)
-            self._replace_parts(rows)
+            self._update_parts(set(), changed)
 
         # step 2: one atomic schema + properties flip
         m = self._core_manifest()
@@ -1625,17 +1627,74 @@ class EncodedTable:
                     os.path.join(self.path, name), stale_after_s
                 )
 
-    def commit_staging(self, staging_dir: str, lineage_rows: dict[int, dict]) -> None:
+    def commit_staging(
+        self,
+        staging_dir: str,
+        lineage_rows: dict[int, dict],
+        *,
+        offset: int = 0,
+        replace: set[int] | None = None,
+        amend: dict[int, dict] | None = None,
+    ) -> dict[int, dict]:
+        """The one commit primitive for staged parts (every writer: encode
+        waves, the Catalyst writer, compaction and every copy-on-write or
+        merge-on-read rewrite). Staged ``part_id=p`` dirs move into
+        ``data/part_id={p + offset}``; ``lineage_rows`` is keyed by the
+        staged ``p``. Then the part set flips:
+
+        * ``replace=None``: in-place append of the new rows
+          (:meth:`_append_parts`, only the touched shards rewrite);
+        * any ``replace`` set, even an empty one: ONE generation flip
+          (:meth:`_update_parts`) that removes -- and tombstones -- the
+          replaced ids and adds the new rows plus ``amend`` (full lineage
+          rows of live parts to overwrite, e.g. merge-on-read vectors).
+
+        A crash before the flip leaves the old part set intact (moved dirs
+        are uncommitted, swept by vacuum or replaced by a retry). After the
+        flip, at snapshot retention 0 the replaced dirs are deleted unless
+        a tag's pinned lineage still lists them; then staging goes.
+        Returns the committed rows keyed by their final part ids."""
         for name in sorted(os.listdir(staging_dir)):
             if not name.startswith("part_id="):
                 continue
-            src = os.path.join(staging_dir, name)
-            dst = os.path.join(self.data_dir, name)
+            pid = int(name.split("=", 1)[1]) + offset
+            dst = os.path.join(self.data_dir, f"part_id={pid}")
             if os.path.exists(dst):
                 shutil.rmtree(dst)  # uncommitted leftover from a killed run
-            os.rename(src, dst)
-        self._append_parts(lineage_rows)
+            os.rename(os.path.join(staging_dir, name), dst)
+        added = {int(p) + offset: row for p, row in lineage_rows.items()}
+        if replace is None:
+            self._append_parts(added)
+        else:
+            self._update_parts(remove=set(replace), add={**(amend or {}), **added})
+            if replace and self.snapshot_retention() == 0:
+                pinned = self._tag_referenced_parts()
+                for pid in set(replace) - pinned if pinned is not None else ():
+                    shutil.rmtree(
+                        os.path.join(self.data_dir, f"part_id={pid}"),
+                        ignore_errors=True,
+                    )
         shutil.rmtree(staging_dir, ignore_errors=True)
+        return added
+
+    def _tag_referenced_parts(self) -> set[int] | None:
+        """Part ids referenced by ANY tagged generation's lineage -- the
+        pinned snapshots a reader may still target at snapshot-retention 0.
+        Part ids are never reused (the persisted high-water mark), so a
+        rewritten-away part is safe to delete exactly when no tagged
+        generation lists it. Returns None when a pinned generation's
+        lineage can't be read: the caller must then delete NOTHING
+        (fail-safe; vacuum reconciles later). At very large part counts
+        with many tags this is one O(shards) manifest parse per tagged
+        generation; rewrites already pay a lineage read, and the sweep
+        stays driver-metadata-only."""
+        ids: set[int] = set()
+        for g in sorted(self.tagged_generations()):
+            try:
+                ids |= set(self.lineage_at(g))
+            except Exception:
+                return None
+        return ids
 
     # -- read ---------------------------------------------------------------
 

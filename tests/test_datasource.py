@@ -557,6 +557,18 @@ def test_writer_zorder_option(spark, tmp_path):
     ctr = scan_counters(spark)
     decode_job(spark, path, where=("y", ">=", 95000), counters=ctr).count()
     assert ctr["chunks_skipped"].value / max(ctr["chunks_total"].value, 1) >= 0.5
+    # the layout kind is recorded, so maintenance re-applies the Z-curve
+    # instead of silently de-zordering the table
+    from embulk_output_s3_parquet_spark.jobs import compact_job
+    from embulk_output_s3_parquet_spark.sources.tables import EncodedTable
+
+    props = EncodedTable(path).properties()
+    assert props.get("write-order") == ["x", "y"]
+    assert props.get("write-order-zorder") is True
+    compact_job(spark, path)
+    props = EncodedTable(path).properties()
+    assert props.get("write-order") == ["x", "y"]
+    assert props.get("write-order-zorder") is True
 
 
 def test_catalyst_append_to_evolved_table(spark, tmp_path):

@@ -2815,10 +2815,11 @@ def test_diff_job_changelog(spark, tmp_path):
 
 
 def test_decode_chunks_fills_added_columns(spark, corpus, tmp_path):
-    """The groupBy-reassembly decode (decode_job_chunks, also compact_job's
-    scan) must null-fill columns added AFTER parts were committed -- and a
-    projection of ONLY post-ADD columns must still return every row (one
-    stored anchor column rides the scan for the chunk row counts)."""
+    """The groupBy-reassembly decode (decode_job_chunks) must null-fill
+    columns added AFTER parts were committed -- and a projection of ONLY
+    post-ADD columns must still return every row (one stored anchor column
+    rides the scan for the chunk row counts). compact_job, which decodes
+    through decode_table_scan, must then store the added column's nulls."""
     from pyspark.sql import types as T
 
     from embulk_output_s3_parquet_spark.jobs import compact_job, decode_job_chunks
@@ -2841,8 +2842,7 @@ def test_decode_chunks_fills_added_columns(spark, corpus, tmp_path):
     assert mixed.count() == ROWS
     assert mixed.where(F.col("note").isNull()).count() == ROWS
 
-    # compaction decodes through the same path and must materialize the
-    # added column as stored nulls
+    # compaction must materialize the added column as stored nulls
     compact_job(spark, path, _policy())
     assert decode_job(spark, path).where(F.col("note").isNull()).count() == ROWS
 
