@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .operators.decode import decode_chunks
+from .operators.decode import decode_chunks, part_job_width
 from .operators.encode import encode_grouped, encode_local
 from .plans.partitioning import assign_partitions, assign_partitions_generic
 from .plans.policy import CodecPolicy, ConfigException
@@ -547,7 +547,10 @@ def count_job(
         )
     if not dirs:
         return total
-    par = min(len(dirs), spark.sparkContext.defaultParallelism * 2)
+    par = min(len(dirs), 2 * part_job_width(
+        table, [int(d[0].rsplit("=", 1)[1]) for d in dirs],
+        spark.sparkContext.defaultParallelism,
+    ))
     path_df = spark.createDataFrame(dirs, "dir string, dv string").repartition(par)
 
     def cnt(it):
@@ -705,7 +708,10 @@ def _stats_scan(
                 )
             )
     if dirs:
-        par = min(len(dirs), spark.sparkContext.defaultParallelism * 2)
+        par = min(len(dirs), 2 * part_job_width(
+            table, [int(d[0].rsplit("=", 1)[1]) for d in dirs],
+            spark.sparkContext.defaultParallelism,
+        ))
         path_df = spark.createDataFrame(
             dirs, "dir string, boundary boolean, cols string, dv string"
         ).repartition(par)
@@ -2253,7 +2259,10 @@ def _local_parts_rewrite(
         )
         for i, (pids, bucket) in enumerate(groups)
     ]
-    par = min(len(work), spark.sparkContext.defaultParallelism * 2)
+    par = min(len(work), 2 * part_job_width(
+        table, [p for pids, _ in groups for p in pids],
+        spark.sparkContext.defaultParallelism,
+    ))
     src = spark.createDataFrame(
         work, "new_pid long, dirs string, bucket int"
     ).repartition(par)
@@ -2423,7 +2432,9 @@ def _mor_mark(
         )
         for pid in sorted(affected)
     ]
-    par = min(len(work), spark.sparkContext.defaultParallelism * 2)
+    par = min(len(work), 2 * part_job_width(
+        table, affected, spark.sparkContext.defaultParallelism
+    ))
     src = spark.createDataFrame(work, "part_id long, dir string, dv string")
     src = src.repartition(par)
     cjs = conjuncts

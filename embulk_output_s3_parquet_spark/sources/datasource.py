@@ -430,8 +430,10 @@ class EncodedTableStreamReader(DataSourceStreamReader):
         parts = self._table().completed_parts()
         true_next = (max(parts) + 1) if parts else 0
         nxt = _capped_next(parts, self._hwm_next, self._max_ppt, true_next)
+        # never behind an offset already reported: a later batch starting
+        # from a regressed offset would re-ship every part above it
         self._hwm_next = max(self._hwm_next or 0, nxt)
-        return {"gen": self._gen, "next": nxt}
+        return {"gen": self._gen, "next": self._hwm_next}
 
     def partitions(self, start: dict, end: dict):
         # a restarted stream learns its checkpointed position here: cap

@@ -788,10 +788,17 @@ class EncodedTable:
         for _attempt in range(3):
             parts_dir = self.parts_dir  # re-resolves the generation pointer
             out: dict[str, dict] = {}
-            if not os.path.isdir(parts_dir):
-                return out
+            try:
+                names = sorted(os.listdir(parts_dir))
+            except FileNotFoundError:
+                # no shards yet -- or the generation flipped after the
+                # pointer was read and its old dir was reclaimed (snapshot
+                # retention 0), which must not read as an empty table
+                if parts_dir == self.parts_dir:
+                    return out
+                continue
             ok = True
-            for name in sorted(os.listdir(parts_dir)):
+            for name in names:
                 if not _is_lineage_shard(name):
                     continue
                 rows = _load_shard_cached(os.path.join(parts_dir, name))
@@ -1574,6 +1581,23 @@ class EncodedTable:
 
     def lineage(self) -> dict[int, dict]:
         return {int(k): v for k, v in self.manifest()["parts"].items()}
+
+    def parts_enc_bytes(self, pids, missing: int) -> int:
+        """Summed lineage ``enc_bytes`` of ``pids``, parsing only the live
+        shards that hold them (not the whole manifest); a pid absent from
+        the live lineage (a retained snapshot's part) counts ``missing``."""
+        inline = self._core_manifest().get("parts") or {}
+        parts_dir = self.parts_dir
+        by_shard: dict[int, list[int]] = {}
+        for p in pids:
+            by_shard.setdefault(int(p) // SHARD_SIZE, []).append(int(p))
+        total = 0
+        for sid, ps in by_shard.items():
+            rows = _load_shard_cached(os.path.join(parts_dir, f"shard-{sid}.json"))
+            for p in ps:
+                row = (rows or {}).get(str(p)) or inline.get(str(p)) or {}
+                total += int(row.get("enc_bytes", missing))
+        return total
 
     def catalog_schema(self, overrides: dict[str, str] | None = None) -> list[dict]:
         """Hive/Glue-style column descriptors with per-column overrides --
