@@ -504,6 +504,7 @@ def count_job(
     # lineage sum (no Spark job at all).
     total = 0
     dirs = []
+    pids = []
     fillable = frozenset(table.added_columns())
     aliases = table.stored_aliases()
     # merge-on-read delete vectors: decided counts shrink by the recorded
@@ -539,6 +540,7 @@ def count_job(
         if all(s == "all" for s in states):
             total += int(row["rows"]) - dv_n
             continue
+        pids.append(pid)
         dirs.append(
             (
                 os.path.join(table.data_dir, f"part_id={pid}"),
@@ -548,8 +550,7 @@ def count_job(
     if not dirs:
         return total
     par = min(len(dirs), 2 * part_job_width(
-        table, [int(d[0].rsplit("=", 1)[1]) for d in dirs],
-        spark.sparkContext.defaultParallelism,
+        table, pids, spark.sparkContext.defaultParallelism
     ))
     path_df = spark.createDataFrame(dirs, "dir string, dv string").repartition(par)
 
@@ -654,6 +655,7 @@ def _stats_scan(
         table.surviving_parts(conjuncts, spark=spark) if conjuncts and at_gen is None else None
     )
     dirs = []
+    pids = []
     for pid in sorted(lineage):
         row = lineage[pid]
         zones = row.get("zones", {})
@@ -699,6 +701,7 @@ def _stats_scan(
                 else:
                     unresolved_cols.append(c)
         if boundary or unresolved_cols:
+            pids.append(pid)
             dirs.append(
                 (
                     os.path.join(table.data_dir, f"part_id={pid}"),
@@ -709,8 +712,7 @@ def _stats_scan(
             )
     if dirs:
         par = min(len(dirs), 2 * part_job_width(
-            table, [int(d[0].rsplit("=", 1)[1]) for d in dirs],
-            spark.sparkContext.defaultParallelism,
+            table, pids, spark.sparkContext.defaultParallelism
         ))
         path_df = spark.createDataFrame(
             dirs, "dir string, boundary boolean, cols string, dv string"

@@ -114,24 +114,24 @@ def _prune_schema(
     return T.StructType([f for f in out_schema.fields if f.name in columns])
 
 
-# encoded bytes worth one task of a per-part job: starting a Python task
-# costs ~0.1 s in local mode (measured on local[8], 4 vCPUs: an identity
-# mapInArrow over 16 one-row partitions took 1.4 s vs 0.7 s over one),
-# while a task decodes 1 MiB of chunks in a few tens of ms
+# encoded bytes worth one task of a per-part job. Measured on 4 vCPUs: an
+# identity mapInArrow over 16 one-row partitions took 1.4 s vs 0.7 s over
+# one (local[8]); on local[4], decoding one 0.5 MiB part in one task, or
+# two (1 MiB) in two, ran 0.05 s faster than in four part slices
 _PART_TASK_BYTES = 1 << 20
 
 
 def part_job_width(table, pids, cores: int) -> int:
     """Tasks worth scheduling for a job that reads the parts ``pids``
-    (decode scans, task-local rewrites, merge-on-read marking): ``cores``,
-    fewer when the parts' encoded bytes are too small to pay for a task
-    each -- a small table, or a DML rewrite of a few small parts, then
-    runs in one or two tasks instead of one per part. Jobs over more
-    than 4096 parts keep ``cores`` without a lineage read."""
+    (decode scans, task-local rewrites, merge-on-read marking, counts):
+    ``cores``, fewer when the parts' encoded bytes are too small to pay
+    for a task each -- a small table, or a DML rewrite of a few small
+    parts, then runs in one or two tasks instead of one per part. A part
+    missing from the live lineage (a retained snapshot's) counts as one
+    task's worth."""
     pids = list(pids)
-    if len(pids) > 4096:
-        return cores
-    total = table.parts_enc_bytes(pids, missing=_PART_TASK_BYTES)
+    sizes = table.parts_enc_bytes(pids)
+    total = sum(sizes.get(p, _PART_TASK_BYTES) for p in pids)
     return max(1, min(cores, -(-total // _PART_TASK_BYTES)))
 
 

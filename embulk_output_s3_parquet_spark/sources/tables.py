@@ -1582,22 +1582,22 @@ class EncodedTable:
     def lineage(self) -> dict[int, dict]:
         return {int(k): v for k, v in self.manifest()["parts"].items()}
 
-    def parts_enc_bytes(self, pids, missing: int) -> int:
-        """Summed lineage ``enc_bytes`` of ``pids``, parsing only the live
-        shards that hold them (not the whole manifest); a pid absent from
-        the live lineage (a retained snapshot's part) counts ``missing``."""
+    def parts_enc_bytes(self, pids) -> dict[int, int]:
+        """Lineage ``enc_bytes`` of those ``pids`` the live lineage holds,
+        parsing only the shards that hold them (not the whole manifest)."""
         inline = self._core_manifest().get("parts") or {}
         parts_dir = self.parts_dir
         by_shard: dict[int, list[int]] = {}
         for p in pids:
             by_shard.setdefault(int(p) // SHARD_SIZE, []).append(int(p))
-        total = 0
+        out: dict[int, int] = {}
         for sid, ps in by_shard.items():
             rows = _load_shard_cached(os.path.join(parts_dir, f"shard-{sid}.json"))
             for p in ps:
-                row = (rows or {}).get(str(p)) or inline.get(str(p)) or {}
-                total += int(row.get("enc_bytes", missing))
-        return total
+                row = (rows or {}).get(str(p)) or inline.get(str(p))
+                if row and "enc_bytes" in row:
+                    out[p] = int(row["enc_bytes"])
+        return out
 
     def catalog_schema(self, overrides: dict[str, str] | None = None) -> list[dict]:
         """Hive/Glue-style column descriptors with per-column overrides --

@@ -1,10 +1,14 @@
 """Task sizing of per-part jobs (decode scans, task-local rewrites,
-merge-on-read marking): small parts share a task, large ones keep the
-full width."""
+merge-on-read marking, counts): small parts share a task, large ones keep
+the full width."""
 
 from __future__ import annotations
 
+from pyspark.sql import types as T
+
 from embulk_output_s3_parquet_spark.operators.decode import part_job_width
+from embulk_output_s3_parquet_spark.plans.policy import CodecPolicy
+from embulk_output_s3_parquet_spark.sources.tables import SHARD_SIZE, EncodedTable
 
 MIB = 1 << 20
 
@@ -13,8 +17,8 @@ class _Lineage:
     def __init__(self, enc_bytes: dict[int, int]):
         self.enc_bytes = enc_bytes
 
-    def parts_enc_bytes(self, pids, missing: int) -> int:
-        return sum(self.enc_bytes.get(p, missing) for p in pids)
+    def parts_enc_bytes(self, pids) -> dict[int, int]:
+        return {p: self.enc_bytes[p] for p in pids if p in self.enc_bytes}
 
 
 def test_small_parts_share_one_task():
@@ -34,9 +38,9 @@ def test_unknown_parts_count_a_full_task():
     assert part_job_width(t, [101, 102], 8) == 2
 
 
-def test_wide_jobs_skip_the_lineage_read():
-    class _NoRead:
-        def parts_enc_bytes(self, pids, missing):
-            raise AssertionError("lineage read on a wide job")
-
-    assert part_job_width(_NoRead(), range(5000), 8) == 8
+def test_parts_enc_bytes_reads_the_live_lineage(tmp_path):
+    schema = T.StructType([T.StructField("x", T.LongType())])
+    t = EncodedTable.create(str(tmp_path / "t"), schema, CodecPolicy())
+    pids = [0, 1, SHARD_SIZE + 2]
+    t._append_parts({p: {"rows": 1, "chunks": 1, "enc_bytes": 100 + p} for p in pids})
+    assert t.parts_enc_bytes(pids + [7]) == {p: 100 + p for p in pids}
